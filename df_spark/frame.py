@@ -26,6 +26,7 @@ Semantic deltas from the reference (deliberate, documented):
 
 from __future__ import annotations
 
+import uuid
 from typing import Any, Mapping, Sequence
 
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -178,7 +179,9 @@ class Df:
 
     @staticmethod
     def from_spark(sdf: DataFrame) -> "Df":
-        return Df(sdf, fingerprint=fingerprint_source("spark", str(id(sdf))))
+        # A fresh token per call: the content of an arbitrary Spark plan
+        # is not addressable, and id(sdf) is reused once sdf is collected.
+        return Df(sdf, fingerprint=fingerprint_source("spark", uuid.uuid4().hex))
 
     # ------------------------------------------------------------------
     # helpers

@@ -19,10 +19,17 @@ this engine unchanged:
   "the whole lineage tree is the wire format").
 
 The plan this server returns is its own opaque op list (the client
-round-trips it verbatim, exactly as with the reference server). Plans
-are replayed through the fluent ``Df`` on action, so the PlanCache's
-content-addressed fingerprints give reference-style cross-request
-memoization for free. ``Count``/``Take`` are implemented (the reference
+round-trips it verbatim, exactly as with the reference server). The
+``Engine`` builds plans incrementally through a plan-prefix memo, the
+reference pool's content addressing (``src/pool.rs:25-94``) applied to
+plan steps: a step's key hashes its parent's key with the step's
+canonical JSON, and a ``Read`` key also hashes the source file's
+(mtime, size), so an edited file is read again instead of serving stale
+rows. An ``Op`` request builds only its new step on the memoized
+prefix; an ``Action`` finds its whole plan memoized, and each source is
+read once per ``Engine``. The memo is an LRU of ``MEMO_CAPACITY`` lazy
+plan references. Action inputs are then persisted in a ``PlanCache`` by
+``Df`` fingerprint. ``Count``/``Take`` are implemented (the reference
 declares them but panics — ``src/api.rs:78``).
 """
 
@@ -30,6 +37,7 @@ from __future__ import annotations
 
 import json
 import threading
+from collections import OrderedDict
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from typing import Any
 
@@ -39,6 +47,7 @@ from pyspark.sql import types as T
 from .expr import Aggregator, Comparator, Expr, Predicate, Value, c, v
 from .frame import Df
 from .plans.cache import PlanCache
+from .plans.fingerprint import fingerprint_op, fingerprint_source
 
 _TYPE_MAP = {
     "Bool": T.BooleanType(),
@@ -109,59 +118,180 @@ def _parse_schema(obj: dict) -> T.StructType:
     )
 
 
+#: Plan prefixes one ``Engine`` memoizes, least recently used evicted
+#: first. An entry is a ``Df`` over an unexecuted Spark plan, so the
+#: bound caps driver-side plan objects, not data.
+MEMO_CAPACITY = 256
+
+
+def _step_key(parent: str, op: dict, salt: str = "") -> str:
+    return fingerprint_op(parent, json.dumps(op, sort_keys=True) + salt)
+
+
+def _plan_keys(plan: list[dict]) -> list[str]:
+    """Memo key of every prefix of ``plan``: each step's key hashes its
+    parent's key with the step's canonical JSON. A ``Read`` starts a new
+    chain from the source's (mtime, size) snapshot, so an edited file
+    gets new keys; a ``Join`` also folds in the key of its right plan,
+    whose own ``Read`` snapshot is not in the JSON."""
+    if not plan:
+        raise ValueError("empty plan")
+    keys: list[str] = []
+    key = ""
+    for op in plan:
+        (name, args), = op.items()
+        if name == "Read":
+            key = _step_key(fingerprint_source(args[0], args[1]), op)
+        elif name == "Join":
+            key = _step_key(key, op, _plan_keys(args[0])[-1])
+        else:
+            key = _step_key(key, op)
+        keys.append(key)
+    return keys
+
+
 class Engine:
-    """Replays wire plans through the fluent Df; caches by fingerprint."""
+    """Builds wire plans into ``Df``s through a plan-prefix memo and
+    runs actions on them through a ``PlanCache``.
+
+    The memo maps the key of every plan prefix (see ``_plan_keys``) to
+    its ``Df``, like the reference's content-addressed pool
+    (src/pool.rs:25-94, src/dataframe.rs:181-229). ``build`` resumes
+    from the longest memoized prefix, so an ``Op`` request builds and
+    validates only its new step, an ``Action`` is a memo hit, and each
+    source is read once per Engine until its file changes. The memo is
+    an LRU of ``MEMO_CAPACITY`` lazy plan references; failed steps are
+    not memoized. Only dict operations hold the lock, never Spark
+    calls: a request that needs a step another request is building
+    waits for that build instead of repeating it, so concurrent clients
+    also read each source once. ``memo_hits`` counts plan steps served
+    from the memo, ``memo_misses`` steps this Engine built.
+
+    ``cache`` (a ``PlanCache``) persists action inputs by ``Df``
+    fingerprint, so a re-submitted plan reuses the computed frame."""
 
     def __init__(self, spark: SparkSession, cache_capacity: int = 32) -> None:
         self.spark = spark
         self.cache = PlanCache(capacity=cache_capacity)
+        self._memo: OrderedDict[str, Df] = OrderedDict()
+        # steps being built, each with the event its waiters wait on
+        self._running: dict[str, threading.Event] = {}
+        # last (mtime, size) snapshot read of each source path
+        self._snapshots: dict[str, str] = {}
+        self._lock = threading.Lock()
+        self.memo_hits = 0
+        self.memo_misses = 0
+
+    @property
+    def memo_size(self) -> int:
+        with self._lock:
+            return len(self._memo)
 
     def build(self, plan: list[dict]) -> Df:
+        keys = _plan_keys(plan)
         df: Df | None = None
-        for op in plan:
-            (name, args), = op.items()
-            if name == "Read":
-                fmt, path, schema = args
-                if fmt == "csv":
-                    df = Df.from_csv(self.spark, path, _parse_schema(schema))
-                elif fmt == "parquet":  # extension beyond the reference
-                    df = Df.from_parquet(self.spark, path)
-                else:
-                    raise ValueError(f"unknown format {fmt!r}")
-                continue
-            if df is None:
-                raise ValueError("plan has no Read source")
-            if name == "Select":
-                df = df.select(*[_parse_expr(e) for e in args])
-            elif name == "Filter":
-                col, pred = args
-                df = df.filter(col, Predicate(_CMP_MAP[pred["comparator"]],
-                                              _parse_value(pred["value"])))
-            elif name == "OrderBy":
-                df = df.order_by(*args)
-            elif name == "GroupBy":
-                df = df.group_by(*args)
-            elif name == "Aggregation":
-                df = df.aggregate({col: _AGG_MAP[a] for col, a in args.items()})
-            elif name == "Join":
-                right_plan, lcol, rcol = args
-                df = df.join(self.build(right_plan), lcol, rcol)
-            else:
-                raise ValueError(f"unknown op {name!r}")
-        if df is None:
-            raise ValueError("empty plan")
+        start = 0
+        with self._lock:
+            for i in range(len(keys) - 1, -1, -1):
+                if keys[i] in self._memo:
+                    df, start = self._memo[keys[i]], i + 1
+                    break
+            for key in keys[:start]:  # keep the lineage, its Read too, recent
+                if key in self._memo:
+                    self._memo.move_to_end(key)
+            self.memo_hits += start
+        for op, key in zip(plan[start:], keys[start:]):
+            df = self._build_step(key, df, op)
         return df
+
+    def _build_step(self, key: str, parent: Df | None, op: dict) -> Df:
+        """Build one step and memoize it, or wait for the request that
+        is already building it and take its result."""
+        while True:
+            with self._lock:
+                if key in self._memo:
+                    self.memo_hits += 1
+                    self._memo.move_to_end(key)
+                    return self._memo[key]
+                running = self._running.get(key)
+                if running is None:
+                    running = self._running[key] = threading.Event()
+                    self.memo_misses += 1
+                    break
+            running.wait()  # if that build fails, the next pass builds
+        try:
+            df = self._step(parent, op)
+            with self._lock:
+                self._memo[key] = df
+                while len(self._memo) > MEMO_CAPACITY:
+                    self._memo.popitem(last=False)
+        finally:
+            with self._lock:
+                del self._running[key]
+            running.set()
+        return df
+
+    def _step(self, df: Df | None, op: dict) -> Df:
+        (name, args), = op.items()
+        if name == "Read":
+            return self._read(*args)
+        if df is None:
+            raise ValueError("plan has no Read source")
+        if name == "Select":
+            return df.select(*[_parse_expr(e) for e in args])
+        if name == "Filter":
+            col, pred = args
+            return df.filter(col, Predicate(_CMP_MAP[pred["comparator"]],
+                                            _parse_value(pred["value"])))
+        if name == "OrderBy":
+            return df.order_by(*args)
+        if name == "GroupBy":
+            return df.group_by(*args)
+        if name == "Aggregation":
+            return df.aggregate({col: _AGG_MAP[a] for col, a in args.items()})
+        if name == "Join":
+            right_plan, lcol, rcol = args
+            return df.join(self.build(right_plan), lcol, rcol)
+        raise ValueError(f"unknown op {name!r}")
+
+    def _read(self, fmt: str, path: str, schema: dict | None) -> Df:
+        if fmt not in ("csv", "parquet"):  # parquet: extension beyond the reference
+            raise ValueError(f"unknown format {fmt!r}")
+        snapshot = fingerprint_source(fmt, path)
+        with self._lock:
+            changed = self._snapshots.get(path, snapshot) != snapshot
+            self._snapshots[path] = snapshot
+        if changed:
+            # Spark's CacheManager matches file scans by path: while the
+            # PlanCache holds a persisted plan over the old file, a fresh
+            # read of the edited file would be served the old rows
+            self.spark.catalog.refreshByPath(path)
+        if fmt == "csv":
+            return Df.from_csv(self.spark, path, _parse_schema(schema))
+        return Df.from_parquet(self.spark, path)
+
+    def act(self, plan: list[dict], action: Any) -> dict[str, dict[str, list]]:
+        """Run ``action`` on ``plan``. The built frame goes through the
+        PlanCache: a re-submitted plan, even rebuilt from scratch by a
+        new client, hits the persisted frame instead of recomputing."""
+        df = self.cache.get(self.build(plan))
+        if action == "Collect":
+            return self.blocks(df)
+        if action == "Count":
+            return {"count": {"Int": [df.count()]}}
+        if isinstance(action, dict) and "Take" in action:
+            return self.blocks(df.limit(int(action["Take"])))
+        raise ValueError(f"unknown action {action!r}")
 
     def blocks(self, df: Df) -> dict[str, dict[str, list]]:
         """Columnar result in the reference's externally-tagged AnyBlock
         form (src/block.rs:110-119)."""
-        sdf = df.to_spark()
-        cols = df.collect_columns()
-        out = {}
-        for field in sdf.schema.fields:
-            vals = cols[field.name]
-            out[field.name] = {_block_tag(field.dataType): vals}
-        return out
+        sdf = df.to_spark()  # resolves a pending group_by once
+        rows = sdf.collect()
+        return {
+            field.name: {_block_tag(field.dataType): [r[i] for r in rows]}
+            for i, field in enumerate(sdf.schema.fields)
+        }
 
 
 def _block_tag(dt: T.DataType) -> str:
@@ -192,6 +322,9 @@ def make_handler(engine: Engine):
                     "size": len(engine.cache),
                     "hits": engine.cache.hits,
                     "misses": engine.cache.misses,
+                    "memo_size": engine.memo_size,
+                    "memo_hits": engine.memo_hits,
+                    "memo_misses": engine.memo_misses,
                 }
             ).encode()
             self.send_response(200)
@@ -212,24 +345,10 @@ def make_handler(engine: Engine):
                 if "Read" in fn:
                     plan = [{"Read": fn["Read"]}]
                 elif "Op" in fn:
-                    self_check = engine.build(plan + [fn["Op"]])  # eager validation
-                    _ = self_check  # build errors surface as 400s
                     plan = plan + [fn["Op"]]
+                    engine.build(plan)  # eager validation: a bad op is a 400
                 elif "Action" in fn:
-                    action = fn["Action"]
-                    # content-addressed memoization (reference Pool,
-                    # src/pool.rs:25-94): a re-submitted plan — even
-                    # rebuilt from scratch by a new client — hits the
-                    # persisted frame instead of recomputing
-                    df = engine.cache.get(engine.build(plan))
-                    if action == "Collect":
-                        blocks = engine.blocks(df)
-                    elif action == "Count":
-                        blocks = {"count": {"Int": [df.count()]}}
-                    elif isinstance(action, dict) and "Take" in action:
-                        blocks = engine.blocks(df.limit(int(action["Take"])))
-                    else:
-                        raise ValueError(f"unknown action {action!r}")
+                    blocks = engine.act(plan, fn["Action"])
                 else:
                     raise ValueError(f"unknown function {fn!r}")
                 payload = json.dumps({"dataframe": plan, "blocks": blocks})

@@ -56,3 +56,17 @@ def test_fingerprint_changes_when_source_changes(spark, tmp_path):
     # the reference hashes only path+column and would serve stale cache
     # (src/reader.rs:92-97); our fingerprint includes the file snapshot
     assert fp1 != fp2
+
+
+def test_from_spark_fingerprints_unique_after_gc(spark):
+    # CPython reuses id() once a frame is collected, so an id-based
+    # fingerprint would give two different frames one content address
+    import gc
+
+    fps = []
+    for i in range(100):
+        df = Df.from_spark(spark.range(i + 1))
+        fps.append(df.fingerprint)
+        del df
+        gc.collect()
+    assert len(set(fps)) == 100

@@ -5,11 +5,14 @@ passing here means the reference client works against this engine."""
 from __future__ import annotations
 
 import json
+import sys
+import threading
 import urllib.request
 
 import pytest
 
-from df_spark.server import start_server
+from df_spark.frame import Df
+from df_spark.server import Engine, start_server
 
 PORT = 3917
 URI = f"http://127.0.0.1:{PORT}/call"
@@ -222,8 +225,208 @@ def test_pool_memoization_and_introspection(server, small_csv):
     plan = call(None, {"Read": ["csv", small_csv, SMALL_SCHEMA]})["dataframe"]
     plan = call(plan, {"Op": {"Select": [{"Source": "int"}]}})["dataframe"]
     first = call(plan, {"Action": "Collect"})
+    mid = pool()
     second = call(plan, {"Action": "Collect"})  # identical plan, new request
     assert first["blocks"] == second["blocks"] == {"int": {"Int": [1, 2, 3]}}
     after = pool()
     assert after["size"] >= 1
     assert after["hits"] >= before["hits"] + 1  # second run reused the frame
+    # the re-submitted plan is rebuilt from the build memo: every step
+    # a hit, none built again
+    assert after["memo_hits"] == mid["memo_hits"] + len(plan)
+    assert after["memo_misses"] == mid["memo_misses"]
+    assert after["memo_size"] >= len(plan)
+
+
+# ---------------------------------------------------------------------------
+# plan-prefix memo
+# ---------------------------------------------------------------------------
+
+
+def _requests(engine, plan):
+    """Build ``plan`` (Read, Ops, Action) the way its wire requests do:
+    every Op request builds its prefix, then the Action runs."""
+    for i in range(2, len(plan)):
+        engine.build(plan[:i])
+    return engine.act(plan[:-1], plan[-1]["Action"])
+
+
+def _count_reads(monkeypatch):
+    reads = []
+    for name in ("from_csv", "from_parquet"):
+        orig = getattr(Df, name)
+
+        def counted(spark, path, *args, _orig=orig, **kwargs):
+            reads.append(path)
+            return _orig(spark, path, *args, **kwargs)
+
+        monkeypatch.setattr(Df, name, staticmethod(counted))
+    return reads
+
+
+def test_memo_reads_each_source_once(spark, sf_dir, small_csv, monkeypatch):
+    reads = _count_reads(monkeypatch)
+    engine = Engine(spark)
+    csv = {"Read": ["csv", small_csv, SMALL_SCHEMA]}
+    orders = {"Read": ["parquet", f"{sf_dir}/orders.parquet", None]}
+    small = [csv, {"Filter": ["bool", {"comparator": "Equal", "value": {"Bool": True}}]},
+             {"Select": [{"Source": "int"}]}, {"Action": "Collect"}]
+    other = [csv, {"Select": [{"Alias": ["r_int", {"Source": "int"}]}]}]
+    joined = [csv, {"Join": [other, "int", "r_int"]}, {"Action": "Count"}]
+    big = [orders, {"Filter": ["o_totalprice", {"comparator": "GreaterThan",
+                                                "value": {"Float": {"value": 1e5, "phantom": None}}}]},
+           {"Join": [[orders, {"Select": [{"Alias": ["k", {"Source": "o_orderkey"}]}]}],
+                     "o_orderkey", "k"]},
+           {"Action": "Count"}]
+    try:
+        for plan in (small, small, joined, big, joined, big):
+            _requests(engine, plan)
+        assert sorted(reads) == sorted([small_csv, f"{sf_dir}/orders.parquet"])
+        assert engine.memo_hits > engine.memo_misses
+    finally:
+        engine.cache.clear()
+
+
+def test_memo_concurrent_builds_share_steps(spark, sf_dir, small_csv, monkeypatch):
+    # more threads than cores race on the same prefixes: each step is
+    # built once, waiters take the builder's frame, each source is read once
+    reads = _count_reads(monkeypatch)
+    engine = Engine(spark)
+    csv = {"Read": ["csv", small_csv, SMALL_SCHEMA]}
+    orders = {"Read": ["parquet", f"{sf_dir}/orders.parquet", None]}
+    plans = [
+        [csv, {"Filter": ["int", {"comparator": "GreaterThan", "value": {"Int": k}}]},
+         {"Select": [{"Source": "int"}, {"Source": "string"}]}]
+        for k in range(3)
+    ] + [
+        [orders, {"Join": [[csv, {"Select": [{"Alias": ["r_int", {"Source": "int"}]}]}],
+                           "o_orderkey", "r_int"]}],
+    ]
+    built: list[dict] = [{} for _ in range(8)]
+    errors: list[Exception] = []
+
+    def worker(out):
+        try:
+            for plan in plans + plans[::-1]:
+                out[json.dumps(plan)] = engine.build(plan)
+        except Exception as e:  # noqa: BLE001 — reported below
+            errors.append(e)
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        threads = [threading.Thread(target=worker, args=(out,)) for out in built]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=120)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(t.is_alive() for t in threads)
+    assert not errors, errors
+    assert sorted(reads) == sorted([small_csv, f"{sf_dir}/orders.parquet"])
+    assert engine.memo_misses == engine.memo_size
+    for plan in map(json.dumps, plans):
+        assert len({id(out[plan]) for out in built}) == 1
+
+
+def test_memo_rereads_edited_source(server, small_csv, tmp_path):
+    # each plan's frame is persisted by its first action, so the edited
+    # file must be read again and not be served from any cached copy;
+    # the join's JSON names the edited file only inside its right plan
+    path = tmp_path / "edited.csv"
+    read = {"Read": ["csv", str(path), SMALL_SCHEMA]}
+    op = {"Op": {"Select": [{"Source": "int"}]}}
+    right = [read, {"Select": [{"Alias": ["r_int", {"Source": "int"}]}]}]
+    join = {"Op": {"Join": [right, "int", "r_int"]}}
+    for text, ints in [("1|foo|true\n2|bar|false\n", [1, 2]),
+                       ("1|foo|true\n2|bar|false\n3|baz|true\n", [1, 2, 3])]:
+        path.write_text(text)
+        plan = call(None, {"Read": ["csv", small_csv, SMALL_SCHEMA]})["dataframe"]
+        plan = call(plan, join)["dataframe"]
+        assert call(plan, {"Action": "Count"})["blocks"] == {"count": {"Int": [len(ints)]}}
+        plan = call(call(None, read)["dataframe"], op)["dataframe"]
+        assert call(plan, {"Action": "Collect"})["blocks"] == {"int": {"Int": ints}}
+
+
+def test_bad_op_on_memoized_prefix(server, spark, small_csv):
+    r = call(None, {"Read": ["csv", small_csv, SMALL_SCHEMA]})
+    prefix = call(r["dataframe"], {"Op": {"Filter": ["bool", {
+        "comparator": "Equal", "value": {"Bool": True}}]}})["dataframe"]
+    with pytest.raises(urllib.error.HTTPError) as exc:
+        call(prefix, {"Op": {"Select": [{"Source": "nope"}]}})
+    assert exc.value.code == 400
+    r = call(prefix, {"Op": {"Select": [{"Source": "string"}]}})
+    assert call(r["dataframe"], {"Action": "Collect"})["blocks"] == {
+        "string": {"String": ["foo", "baz"]}}
+    # a failed step is not memoized
+    engine = Engine(spark)
+    plan = [prefix[0], {"Select": [{"Source": "nope"}]}]
+    with pytest.raises(Exception, match="unknown column"):
+        engine.build(plan)
+    assert engine.memo_size == 1
+    with pytest.raises(Exception, match="unknown column"):
+        engine.build(plan)
+
+
+def _stream(sf_dir):
+    """Wire plans over lineitem/orders in the benchmark client's shape:
+    Read -> Filter -> [Join] -> Select -> GroupBy -> Aggregation ->
+    [OrderBy] -> Action, sharing prefixes and repeating plans."""
+    def flt(col, cmp_, val):
+        return {"Filter": [col, {"comparator": cmp_, "value": val}]}
+
+    def f(x):
+        return {"Float": {"value": x, "phantom": None}}
+
+    li = {"Read": ["parquet", f"{sf_dir}/lineitem.parquet", None]}
+    orders = [{"Read": ["parquet", f"{sf_dir}/orders.parquet", None]},
+              flt("o_totalprice", "GreaterThan", f(100000.0))]
+    measures = [
+        {"Alias": ["disc_price", {"Operation": ["Multiply", {"Source": "l_extendedprice"},
+            {"Operation": ["Subtract", {"Constant": f(1.0)}, {"Source": "l_discount"}]}]}]},
+        {"Alias": ["qty", {"Source": "l_quantity"}]},
+    ]
+
+    def tail(keys, aggs, action):
+        ops = [{"Select": [{"Source": k} for k in keys] + measures},
+               {"GroupBy": keys},
+               {"Aggregation": {"disc_price": aggs[0], "qty": aggs[1]}}]
+        if action == "Take":
+            return ops + [{"OrderBy": keys}, {"Action": {"Take": 3}}]
+        return ops + [{"Action": action}]
+
+    q_lt_30 = flt("l_quantity", "LessThan", f(30.0))
+    plans = [
+        [li, q_lt_30] + tail(["l_returnflag"], ["Sum", "Average"], "Collect"),
+        [li, q_lt_30] + tail(["l_returnflag", "l_linestatus"], ["Max", "Count"], "Take"),
+        [li, flt("l_returnflag", "Equal", {"String": "R"})]
+        + tail(["l_linestatus"], ["Min", "Sum"], "Count"),
+        [li, flt("l_linenumber", "GreaterThanOrEq", {"Int": 3}),
+         {"Join": [orders, "l_orderkey", "o_orderkey"]}]
+        + tail(["o_orderpriority"], ["Sum", "Average"], "Collect"),
+        [li, q_lt_30, {"Join": [orders, "l_orderkey", "o_orderkey"]}]
+        + tail(["o_orderstatus"], ["Count", "Max"], "Take"),
+    ]
+    return plans + plans[::2]
+
+
+def _rows(blocks):
+    cols = sorted(blocks)
+    vals = [next(iter(blocks[c].values())) for c in cols]
+    return cols, sorted(zip(*vals), key=repr)
+
+
+def test_memoized_engine_matches_fresh_engines(spark, sf_dir):
+    memo = Engine(spark)
+    fresh = []
+    try:
+        for plan in _stream(sf_dir):
+            got = _requests(memo, plan)
+            fresh.append(Engine(spark))
+            want = fresh[-1].act(plan[:-1], plan[-1]["Action"])
+            assert _rows(got) == _rows(want), plan
+        assert memo.memo_hits > 0
+    finally:
+        for engine in [memo] + fresh:
+            engine.cache.clear()

@@ -3,6 +3,13 @@ times each internal stage of operators.dedup.containment_pairs with
 wall + process-tree CPU deltas, with the rarity build pre-warmed the
 way the bench's pinned ``_build_dedup_rarity`` row does.
 
+The "gather verify" stage deliberately measures the r13 baseline
+verify path: ``mapInPandas`` at about 50k candidate pairs per task. It
+does not exercise the shipped ``mapInArrow`` path at 100k pairs per
+task, so its stage timings are a baseline for comparison, not a
+profile of what ``containment_pairs`` runs today. Only the last
+(declared query, end-to-end) timing runs the shipped code.
+
 Usage: python tools/probe_containment.py [sf_dir] [reps]
 """
 
